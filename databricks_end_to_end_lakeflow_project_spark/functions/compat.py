@@ -127,21 +127,9 @@ def cdsum(units: Column, unit_scale: int = 2, round_scale: int = 2) -> Column:
     return F.round(csum(units, unit_scale), round_scale).cast("double")
 
 
-def charge() -> Column:
-    """disc_price * (1 + l_tax), exact decimal(·,6).
-
-    The intermediate is re-capped at decimal(18,4) (its true scale) so the
-    second product stays within precision 38 in both Spark and DuckDB.
-    """
-    return disc_price().cast("decimal(18,4)") * (F.lit(1) + money("l_tax"))
-
-
 # SQL fragments for the DuckDB oracle — keep in lockstep with the columns above.
 SQL_DISC_PRICE = "CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))"
 SQL_CHARGE = (
     f"CAST({SQL_DISC_PRICE} AS DECIMAL(18,4)) * (1 + CAST(l_tax AS DECIMAL(18,2)))"
 )
 
-
-def sql_dsum(expr: str, alias: str, scale: int = 2) -> str:
-    return f"ROUND(SUM({expr}), {scale})::DOUBLE AS {alias}"

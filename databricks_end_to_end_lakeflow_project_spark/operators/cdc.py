@@ -82,7 +82,7 @@ def _apply_truncates(
 
 
 def merge_upsert_plan(
-    target: DataFrame,
+    target: DataFrame | None,
     updates: DataFrame,
     keys: Sequence[str],
     sequence_by: str | None,
@@ -90,12 +90,20 @@ def merge_upsert_plan(
     truncate_col: str | None = None,
 ) -> DataFrame:
     """Pure-DataFrame MERGE: latest-wins upsert of ``updates`` into
-    ``target``; returns the new table contents.
+    ``target``; returns the new table contents. ``target=None`` is the
+    first write: the latest change per key, creating the table.
 
     Semantics match `DIM_Gold_layer.py:276-283`:
     - not matched → insert;
     - matched → update iff ``updates.seq >= target.seq`` (tie → update);
     - with ``sequence_by=None`` updates always win on match.
+
+    ONE window over updates ∪ target, ordered by (sequence DESC,
+    is_update DESC), picks each key's winner — so the plan carries one
+    hash exchange on the key. ``updates`` need not be deduplicated first:
+    the same window picks the latest change among several for one key
+    (ties on the sequence break arbitrarily, as in any latest-by-key
+    without ``tiebreakers``).
 
     ``delete_col`` names a boolean column on ``updates`` flagging delete
     events (DLT ``apply_as_deletes``, supported by the reference's
@@ -117,8 +125,8 @@ def merge_upsert_plan(
     sequence is discarded before the merge; changes at or after it apply
     normally. Requires ``sequence_by``.
     """
-    cols = list(target.columns)
     extra = [c for c in (delete_col, truncate_col) if c]
+    cols = [c for c in (updates if target is None else target).columns if c not in extra]
     updates = updates.select(*cols, *extra)
     if truncate_col:
         if not sequence_by:
@@ -130,18 +138,14 @@ def merge_upsert_plan(
             ),
             sequence_by, truncate_col, markers,
         )
-        target = _apply_truncates(target, sequence_by, truncate_col, markers)
-    if sequence_by:
-        updates = latest_by_key(updates, keys, [sequence_by])
-        order = [F.col(sequence_by).desc_nulls_last(), F.col(_SRC).desc()]
-    else:
-        updates = updates.dropDuplicates(list(keys))
-        order = [F.col(_SRC).desc()]
-    if delete_col:
-        target = target.withColumn(delete_col, F.lit(False))
-    tagged = updates.withColumn(_SRC, F.lit(1)).unionByName(
-        target.withColumn(_SRC, F.lit(0))
-    )
+        if target is not None:
+            target = _apply_truncates(target, sequence_by, truncate_col, markers)
+    order = [F.col(c).desc_nulls_last() for c in (sequence_by, _SRC) if c]
+    tagged = updates.withColumn(_SRC, F.lit(1))
+    if target is not None:
+        if delete_col:
+            target = target.withColumn(delete_col, F.lit(False))
+        tagged = tagged.unionByName(target.withColumn(_SRC, F.lit(0)))
     w = Window.partitionBy(*keys).orderBy(*order)
     merged = (
         tagged.withColumn(_RN, F.row_number().over(w))
@@ -594,13 +598,23 @@ class ManagedParquetTable:
             shutil.rmtree(os.path.join(self._versions_dir(), str(v)), ignore_errors=True)
         return len(doomed)
 
-    def overwrite(self, df: DataFrame, expect_version: int | None = None) -> None:
+    def _stage(self, df: DataFrame) -> str:
+        """Write ``df`` to a fresh sibling stage dir — the expensive part,
+        OUTSIDE the commit lock. A failed job (for example an expectation
+        abort) leaves no stage behind."""
         tmp = self._stage_name()
         writer = df.write.mode("overwrite")
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(tmp)  # expensive stage: OUTSIDE the commit lock
-        self._swap_commit(tmp, expect_version)
+        try:
+            writer.parquet(tmp)
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        return tmp
+
+    def overwrite(self, df: DataFrame, expect_version: int | None = None) -> None:
+        self._swap_commit(self._stage(df), expect_version)
 
     def _swap_commit(self, tmp: str, expect_version: int | None) -> None:
         """Publish a fully-staged table dir atomically-with-recovery:
@@ -664,11 +678,7 @@ class ManagedParquetTable:
         skips the version bump), can observe a partial batch: the same
         reader caveat as the overwrite swap, and the part only a real
         commit LOG fixes."""
-        tmp = self._stage_name()
-        writer = df.write.mode("overwrite")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(tmp)
+        tmp = self._stage(df)
         try:
             with self._commit(expect_version):
                 tag = uuid.uuid4().hex[:8]
@@ -738,27 +748,10 @@ class ManagedParquetTable:
         if not keys:
             raise ValueError("upsert requires business keys")
         if not self.exists():
-            if truncate_col:
-                if not sequence_by:
-                    raise ValueError("truncate_col requires sequence_by")
-                markers = updates.filter(
-                    F.coalesce(F.col(truncate_col), F.lit(False))
-                )
-                updates = _apply_truncates(
-                    updates.filter(
-                        ~F.coalesce(F.col(truncate_col), F.lit(False))
-                    ).drop(truncate_col),
-                    sequence_by, truncate_col, markers,
-                )
-            first = (
-                latest_by_key(updates, keys, [sequence_by])
-                if sequence_by
-                else updates.dropDuplicates(keys)
+            first = merge_upsert_plan(
+                None, updates, keys, sequence_by, delete_col=delete_col,
+                truncate_col=truncate_col,
             )
-            if delete_col:
-                first = first.filter(
-                    ~F.coalesce(F.col(delete_col), F.lit(False))
-                ).drop(delete_col)
             self.overwrite(first, expect_version=expect_version)
             return
         if (
@@ -867,10 +860,7 @@ class ManagedParquetTable:
         merged = merge_upsert_plan(
             target_slice, updates, keys, sequence_by, delete_col=delete_col
         )
-        tmp = self._stage_name()
-        merged.write.mode("overwrite").partitionBy(*self.partition_by).parquet(
-            tmp
-        )  # expensive stage: OUTSIDE the commit lock
+        tmp = self._stage(merged)
         # new partition dirs present in the merge output (a touched
         # partition whose rows all got deleted simply has no dir here)
         new_rels = sorted(
@@ -1953,7 +1943,7 @@ def cdc_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
 
     from databricks_end_to_end_lakeflow_project_spark.pipeline.expectations import (
-        split_expectations,
+        gate,
     )
     from databricks_end_to_end_lakeflow_project_spark.sources.scratch import (
         ephemeral_dir,
@@ -1978,7 +1968,7 @@ def cdc_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     # WRITE: the batch lands in staging (atomic, but invisible to consumers)
     staging.overwrite(batch)
     # AUDIT: expectations over the staged rows only
-    passed, violated = split_expectations(
+    audit = gate(
         staging.read(),
         {
             "valid_custkey": "o_custkey IS NOT NULL",
@@ -1987,8 +1977,8 @@ def cdc_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         dataset="wap_batch",
     )
     # PUBLISH: one atomic commit per side
-    target.overwrite(passed)
-    quarantine.overwrite(violated.drop("__failed_rules", "__dataset"))
+    target.overwrite(audit.passed)
+    quarantine.overwrite(audit.quarantined.drop("__failed_rules", "__dataset"))
     pub = target.read().agg(
         F.count(F.lit(1)).alias("n_published"),
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(

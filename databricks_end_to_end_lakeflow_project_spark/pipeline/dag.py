@@ -13,15 +13,17 @@ and a joined view):
 
 Execution model: ``run()`` resolves the dataset graph by demand
 (memoized recursion over ``ctx.read`` calls — the same dependency
-discovery trick DLT does statically), applies expectations with metrics,
-executes CDC flows in registration order, and materializes any requested
-tables. Each ``run()`` is one incremental batch: re-running after new
-source data arrives upserts the delta (idempotent for unchanged input —
-the reference's `trigger(once=True)` job pattern, T1).
+discovery trick DLT does statically), gates views with their
+expectations, executes CDC flows, and materializes any requested tables.
+Each ``run()`` is one incremental batch: re-running after new source data
+arrives upserts the delta (idempotent for unchanged input — the
+reference's `trigger(once=True)` job pattern, T1).
 
-Scale notes: views are lazy DataFrames — nothing materializes twice; CDC
-flows shuffle once on the business key; targets are ManagedParquetTables
-which can be partitioned for pruned rewrites.
+Scale notes: views are lazy DataFrames — nothing materializes twice, and
+a gated view's expectation metrics are observed by the action that
+consumes it (the flow's own write), not by a separate job; CDC flows
+shuffle once on the business key; targets are ManagedParquetTables which
+can be partitioned for pruned rewrites.
 """
 
 from __future__ import annotations
@@ -40,9 +42,10 @@ from databricks_end_to_end_lakeflow_project_spark.operators.cdc import (
 )
 from databricks_end_to_end_lakeflow_project_spark.pipeline.expectations import (
     ExpectationResult,
+    Gate,
     Policy,
-    apply_expectations,
-    split_expectations,
+    gate,
+    surfacing_failures,
 )
 
 
@@ -95,7 +98,7 @@ class Pipeline:
         self._snapshot_flows: list[_SnapshotFlow] = []
         self._cache: dict[str, DataFrame] = {}
         self._resolving: list[str] = []
-        self.metrics: dict[str, ExpectationResult] = {}
+        self._gates: dict[str, Gate] = {}
         self._pending_quarantine: dict[str, tuple[str, DataFrame]] = {}
         self._mviews: list[str] = []
         self._run_id = 0
@@ -369,7 +372,7 @@ class Pipeline:
         (`dlt.readStream("bookings_silver")`).
 
         Thread-safe: view resolution mutates the shared cache / lineage /
-        metrics / resolving-stack structures, so the whole call holds the
+        gates / resolving-stack structures, so the whole call holds the
         pipeline's re-entrant resolve lock (recursive ``pl.read`` calls
         inside view bodies re-enter it on the same thread). Concurrent
         callers — the per-entity ingest→silver chains and a deferred
@@ -391,15 +394,11 @@ class Pipeline:
             try:
                 v = self._views[name]
                 df = v.fn(self)
-                if v.quarantine_to:
-                    _, quarantined = split_expectations(df, v.expectations, dataset=name)
-                    self._pending_quarantine[name] = (v.quarantine_to, quarantined)
-                df, metrics = apply_expectations(
-                    df, v.expectations, v.policy, dataset=name,
-                    collect_metrics=bool(v.expectations),
-                )
-                if metrics:
-                    self.metrics[name] = metrics
+                if v.expectations:
+                    g = self._gates[name] = gate(df, v.expectations, v.policy, name)
+                    df = g.passed
+                    if v.quarantine_to:
+                        self._pending_quarantine[name] = (v.quarantine_to, g.quarantined)
             finally:
                 self._resolving.pop()
             self._cache[name] = df
@@ -410,6 +409,15 @@ class Pipeline:
 
     def table(self, name: str) -> ManagedParquetTable:
         return self._tables[name]
+
+    @property
+    def metrics(self) -> dict[str, ExpectationResult]:
+        """This run's expectation outcomes, one per gated view whose
+        frame has run; a view resolved but never executed has none."""
+        with self._resolve_lock:
+            gates = dict(self._gates)
+        done = {name: g.result() for name, g in gates.items()}
+        return {name: m for name, m in done.items() if m is not None}
 
     def lineage(self) -> set[tuple[str, str]]:
         """(upstream, downstream) dataset edges discovered so far — the
@@ -434,12 +442,11 @@ class Pipeline:
         the ``__event_log`` table (the DLT event-log analogue —
         `p.event_log()` to query it)."""
         # resolve every flow's source (view resolution serializes on the
-        # resolve lock — it mutates the cache/lineage/metrics structures
-        # and collects expectation metrics eagerly), then run the table
-        # upserts CONCURRENTLY: each flow targets its own managed table
-        # with its own commit lock, so Spark's scheduler interleaves the
-        # independent write jobs exactly like DLT runs independent DAG
-        # nodes in parallel. Results are identical to the sequential
+        # resolve lock — it mutates the cache/lineage/gate structures),
+        # then run the table upserts CONCURRENTLY: each flow targets its
+        # own managed table with its own commit lock, so Spark's
+        # scheduler interleaves the independent write jobs exactly like
+        # DLT runs independent DAG nodes in parallel. Results are identical to the sequential
         # order by target independence. begin/resolve/execute/finalize
         # are public pieces so an orchestrator can overlap them with its
         # OWN work (per-entity ingest→silver chains, a deferred finalize
@@ -458,16 +465,16 @@ class Pipeline:
 
     def begin_run(self) -> None:
         """Open a new incremental batch: drop cached view resolutions so
-        the run observes new source data, reset per-run metric and
-        quarantine accumulators, bump the run id."""
+        the run observes new source data, reset per-run expectation gates
+        and quarantine accumulators, bump the run id."""
         self._cache.clear()
-        self.metrics.clear()
+        self._gates.clear()
         self._pending_quarantine.clear()
         self._run_id += 1
 
     def resolve_flow(self, flow: _CdcFlow) -> tuple[_CdcFlow, DataFrame]:
-        """Resolve one CDC flow's source view (expectations applied,
-        metrics collected) — safe to call from concurrent entity chains;
+        """Resolve one CDC flow's source view (expectations gated, no
+        action run) — safe to call from concurrent entity chains;
         resolution itself serializes on the resolve lock."""
         src = self.read(flow.source)
         if flow.except_columns:
@@ -477,15 +484,19 @@ class Pipeline:
     def execute_flow(self, flow: _CdcFlow, src: DataFrame) -> None:
         """Apply one resolved CDC flow to its target table (SCD1 upsert /
         SCD2 apply). Concurrency-safe across flows: each target is an
-        independent managed table with its own commit lock."""
-        if flow.stored_as_scd_type == 2:
-            scd2_apply(self._tables[flow.target], src, flow.keys, flow.sequence_by)
-        else:
-            self._tables[flow.target].upsert(
-                src, flow.keys, flow.sequence_by,
-                delete_col=flow.apply_as_deletes,
-                truncate_col=flow.apply_as_truncates,
-            )
+        independent managed table with its own commit lock. This write is
+        the action that observes the source view's expectation metrics; a
+        FAIL violation aborts it before the commit and raises
+        :class:`ExpectationFailed`."""
+        with surfacing_failures():
+            if flow.stored_as_scd_type == 2:
+                scd2_apply(self._tables[flow.target], src, flow.keys, flow.sequence_by)
+            else:
+                self._tables[flow.target].upsert(
+                    src, flow.keys, flow.sequence_by,
+                    delete_col=flow.apply_as_deletes,
+                    truncate_col=flow.apply_as_truncates,
+                )
 
     def finalize_run(self, materialize: Sequence[str] = ()) -> None:
         """Close the batch: append flows, snapshot flows, materialized
@@ -493,13 +504,16 @@ class Pipeline:
         read by the CDC target tables themselves, so a caller whose
         downstream only reads those tables may run finalize CONCURRENTLY
         with that downstream work (it still serializes internally on the
-        resolve lock for any view reads it performs)."""
+        resolve lock for any view reads it performs). The event log
+        records the gates whose frame ran by then (see :attr:`metrics`);
+        a gate resolved but never executed neither blocks nor logs."""
         self._run_append_flows()
         self._run_snapshot_flows()
-        for name in self._mviews:
-            self._tables[name].overwrite(self.read(name))
-        for name in materialize:
-            self.read(name).count()
+        with surfacing_failures():
+            for name in self._mviews:
+                self._tables[name].overwrite(self.read(name))
+            for name in materialize:
+                self.read(name).count()
         for _vname, (qtable, qdf) in self._pending_quarantine.items():
             if qtable not in self._tables:
                 self.create_streaming_table(qtable)
@@ -532,7 +546,8 @@ class Pipeline:
     _EVENT_LOG = "__event_log"
 
     def _append_event_log(self) -> None:
-        if not self.metrics:
+        metrics = self.metrics
+        if not metrics:
             return
         rows = [
             (
@@ -543,7 +558,7 @@ class Pipeline:
                 m.passed_rows + m.failed_rows,
                 n_failed,
             )
-            for m in self.metrics.values()
+            for m in metrics.values()
             for rule, n_failed in m.per_rule_failures.items()
         ]
         if self._EVENT_LOG not in self._tables:

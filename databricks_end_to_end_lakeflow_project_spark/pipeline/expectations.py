@@ -5,27 +5,39 @@ Re-expression of DLT expectations (SURVEY.md §2.2 P9 / §2.8 T6; reference
 with four NOT-NULL rules, and `README.md:94` names the `expect`,
 `expect_or_drop`, `expect_all_or_fail` variants).
 
-Implementation: each rule is a SQL boolean expression. Violation counts
-are computed with conditional aggregation in ONE pass over the batch
-(no per-rule scans), then the gated DataFrame is returned according to
-the policy. At 100 TB the metrics pass and the filtered write share the
-scan when the caller materializes both from the same cached/exchanged
-stage; metrics are map-side combinable counters.
+Implementation: each rule is a SQL boolean expression. :func:`gate`
+computes the names of the rules a row fails ONCE, as an array column, and
+derives everything from it:
+
+- the passed frame — DROP filters failing rows, WARN keeps them, FAIL
+  aborts the query in-plan (a ``raise_error`` inside a filter, which
+  column pruning cannot remove), so the consuming write fails before it
+  commits;
+- the quarantine frame — the failing rows, with the array as
+  ``__failed_rules``;
+- the metrics — map-side combinable counters attached to the passed
+  frame with ``DataFrame.observe``, so they ride the action that consumes
+  it (the flow's own write) instead of a separate aggregate job. This is
+  Structured Streaming's contract: the query that does the work reports
+  its metrics.
 """
 
 from __future__ import annotations
 
+import contextlib
 from dataclasses import dataclass, field
 from enum import Enum
 
-from pyspark.sql import DataFrame
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
 class Policy(str, Enum):
     WARN = "warn"  # keep all rows, record violations (dlt.expect)
     DROP = "drop"  # drop violating rows (dlt.expect_or_drop / expect_all_or_drop)
-    FAIL = "fail"  # raise if any violation (dlt.expect_all_or_fail)
+    FAIL = "fail"  # abort on any violation (dlt.expect_all_or_fail)
 
 
 class ExpectationFailed(Exception):
@@ -41,154 +53,96 @@ class ExpectationResult:
     per_rule_failures: dict[str, int] = field(default_factory=dict)
 
 
-def apply_expectations(
-    df: DataFrame,
-    rules: dict[str, str],
-    policy: Policy = Policy.DROP,
-    dataset: str = "<anonymous>",
-    collect_metrics: bool = True,
-) -> tuple[DataFrame, ExpectationResult | None]:
-    """Gate ``df`` with ``rules`` ({name: sql_bool_expr}); all rules must
-    hold for a row to pass. Returns (gated_df, metrics).
+_FAILED = "__failed_rules"
+_ABORT = "expectation failed: "
 
-    With ``collect_metrics=False`` no action is triggered here (pure plan
-    transformation) — streaming callers use this and account metrics per
-    micro-batch instead.
-    """
-    if not rules:
-        return df, None
-    preds = [F.expr(e) for e in rules.values()]
-    all_ok = preds[0]
-    for p in preds[1:]:
-        all_ok = all_ok & p
 
-    metrics = None
-    if collect_metrics:
-        aggs = [
-            F.sum(F.when(~F.coalesce(F.expr(e), F.lit(False)), 1).otherwise(0)).alias(name)
-            for name, e in rules.items()
-        ]
-        aggs.append(F.count(F.lit(1)).alias("__total"))
-        # any-rule-failed rides the same aggregate — a separate
-        # filter().count() action doubled the per-view fixed cost at
-        # micro-batch sizes (medallion replay profile)
-        aggs.append(
-            F.sum(
-                F.when(~F.coalesce(all_ok, F.lit(False)), 1).otherwise(0)
-            ).alias("__failed")
-        )
-        row = df.agg(*aggs).collect()[0]
-        total = row["__total"]
-        per_rule = {name: int(row[name] or 0) for name in rules}
+@dataclass
+class Gate:
+    """One view's expectations: the ``passed`` and ``quarantined``
+    frames, both derived from the single failed-rule array."""
+
+    dataset: str
+    policy: Policy
+    rules: list[str]
+    passed: DataFrame
+    quarantined: DataFrame
+    _obs: Observation
+
+    def result(self) -> ExpectationResult | None:
+        """Metrics of the first action that ran ``passed``; None while no
+        action has. ``Observation.get`` would wait forever on a frame
+        that never runs, so completion is checked without waiting. A
+        finished action completes its observation on Spark's listener
+        thread, so the listener bus is drained first (a bounded wait for
+        events already posted) — the check then cannot miss an action
+        that returned before it."""
+        bus = self.passed.sparkSession.sparkContext._jsc.sc().listenerBus()
+        with contextlib.suppress(Py4JError):  # drain timed out: check anyway
+            bus.waitUntilEmpty(10_000)
+        if not self._obs._jo.future().isCompleted():
+            return None
+        row = self._obs.get
         failed = int(row["__failed"] or 0)
-        metrics = ExpectationResult(
-            dataset=dataset,
-            policy=policy,
-            passed_rows=total - failed,
-            failed_rows=failed,
-            per_rule_failures=per_rule,
-        )
-        if policy is Policy.FAIL and failed:
-            raise ExpectationFailed(f"{dataset}: {failed} rows violate expectations {per_rule}")
-
-    if policy is Policy.WARN:
-        return df, metrics
-    return df.filter(F.coalesce(all_ok, F.lit(False))), metrics
-
-
-def apply_expectations_observed(
-    df: DataFrame,
-    rules: dict[str, str],
-    policy: Policy = Policy.DROP,
-    dataset: str = "<anonymous>",
-):
-    """Zero-extra-pass variant of :func:`apply_expectations`: metrics
-    ride the SAME action that materializes the gated frame, via
-    `df.observe` (Spark's Observation API) — at 100 TB the difference is
-    one scan instead of two or three.
-
-    Returns (gated_df, observation, finish) where ``finish()`` — called
-    AFTER the caller has run an action on gated_df — converts the
-    observed row into an :class:`ExpectationResult` (and raises under
-    ``Policy.FAIL`` if anything violated). Note: with ``Policy.DROP``
-    the observation sits BELOW the filter so it still sees (and counts)
-    the dropped rows.
-    """
-    from pyspark.sql import Observation
-
-    if not rules:
-        return df, None, lambda: None
-    preds = [F.expr(e) for e in rules.values()]
-    all_ok = preds[0]
-    for p in preds[1:]:
-        all_ok = all_ok & p
-
-    obs = Observation(f"expectations:{dataset}")
-    aggs = [
-        F.sum(F.when(~F.coalesce(F.expr(e), F.lit(False)), 1).otherwise(0)).alias(name)
-        for name, e in rules.items()
-    ]
-    aggs.append(F.count(F.lit(1)).alias("__total"))
-    aggs.append(
-        F.sum(F.when(~F.coalesce(all_ok, F.lit(False)), 1).otherwise(0)).alias("__failed")
-    )
-    observed = df.observe(obs, *aggs)
-    gated = observed if policy is Policy.WARN else observed.filter(
-        F.coalesce(all_ok, F.lit(False))
-    )
-
-    def finish() -> ExpectationResult:
-        row = obs.get  # blocks until the caller's action has completed
-        failed = int(row["__failed"] or 0)
-        result = ExpectationResult(
-            dataset=dataset,
-            policy=policy,
+        return ExpectationResult(
+            dataset=self.dataset,
+            policy=self.policy,
             passed_rows=int(row["__total"]) - failed,
             failed_rows=failed,
-            per_rule_failures={name: int(row[name] or 0) for name in rules},
+            per_rule_failures={r: int(row[r] or 0) for r in self.rules},
         )
-        if policy is Policy.FAIL and failed:
-            raise ExpectationFailed(
-                f"{dataset}: {failed} rows violate expectations "
-                f"{result.per_rule_failures}"
-            )
-        return result
-
-    return gated, obs, finish
 
 
-def split_expectations(
+def gate(
     df: DataFrame,
     rules: dict[str, str],
+    policy: Policy = Policy.DROP,
     dataset: str = "<anonymous>",
-) -> tuple[DataFrame, DataFrame]:
-    """Quarantine split: (passing_rows, violating_rows).
-
-    The violating side carries ``__failed_rules`` (array of rule names
-    that failed — a row can violate several) and ``__dataset``, the DLT
-    quarantine-table pattern: instead of silently dropping bad rows,
-    route them to a side table for triage/replay.
-
-    Single-scan design: the per-rule pass/fail vector is computed once as
-    an array of conditional rule names; both sides filter on its size, so
-    when the caller materializes both from one cached stage there is no
-    per-rule re-evaluation.
-    """
-    if not rules:
-        return df, df.limit(0).withColumn(
-            "__failed_rules", F.array().cast("array<string>")
-        ).withColumn("__dataset", F.lit(dataset))
-    failed = F.array_compact(
-        F.array(
-            *[
-                F.when(~F.coalesce(F.expr(e), F.lit(False)), F.lit(name))
-                for name, e in rules.items()
-            ]
+) -> Gate:
+    """Gate ``df`` with ``rules`` ({name: sql_bool_expr}); all rules must
+    hold for a row to pass (a NULL outcome fails). Pure plan
+    transformation: no action runs here."""
+    tagged = df.withColumn(
+        _FAILED,
+        F.array_compact(
+            F.array(
+                *[
+                    F.when(~F.coalesce(F.expr(e), F.lit(False)), F.lit(name))
+                    for name, e in rules.items()
+                ]
+            )
+        ),
+    )
+    ok = F.size(_FAILED) == 0
+    obs = Observation()
+    observed = tagged.observe(
+        obs,
+        F.count(F.lit(1)).alias("__total"),
+        F.sum((~ok).cast("long")).alias("__failed"),
+        *[F.sum(F.array_contains(_FAILED, r).cast("long")).alias(r) for r in rules],
+    )
+    if policy is Policy.DROP:
+        passed = observed.filter(ok)
+    elif policy is Policy.FAIL:
+        abort = F.raise_error(
+            F.concat(F.lit(f"{_ABORT}{dataset} row fails "), F.array_join(_FAILED, ", "))
         )
-    )
-    tagged = df.withColumn("__failed_rules", failed)
-    passed = tagged.filter(F.size("__failed_rules") == 0).drop("__failed_rules")
-    quarantined = tagged.filter(F.size("__failed_rules") > 0).withColumn(
-        "__dataset", F.lit(dataset)
-    )
-    return passed, quarantined
+        passed = observed.filter(F.when(ok, F.lit(True)).otherwise(abort))
+    else:
+        passed = observed
+    quarantined = tagged.filter(~ok).withColumn("__dataset", F.lit(dataset))
+    return Gate(dataset, policy, list(rules), passed.drop(_FAILED), quarantined, obs)
+
+
+@contextlib.contextmanager
+def surfacing_failures():
+    """Re-raise a FAIL gate's in-plan abort, raised by whichever action
+    consumed the gated frame, as :class:`ExpectationFailed`."""
+    try:
+        yield
+    except PySparkException as e:
+        msg = str(e)
+        at = msg.find(_ABORT)
+        if at < 0:
+            raise
+        raise ExpectationFailed(msg[at + len(_ABORT):].split(" SQLSTATE")[0]) from e

@@ -196,21 +196,23 @@ def build_fact(
     cfg: FactConfig,
     clock: dt.datetime | None = None,
 ) -> DataFrame:
-    """One incremental fact build: cursor slice → dedup to grain →
-    broadcast star joins to fetch surrogate keys → upsert on the grain.
+    """One incremental fact build: cursor slice → broadcast star joins to
+    fetch surrogate keys → upsert on the grain; returns the upserted
+    batch.
+
+    The slice is not deduplicated to the grain first: the upsert's single
+    merge window already keeps the latest change per grain key, so a
+    pre-dedup would only add a second shuffle on the same key. (Dims keep
+    theirs — surrogate ranking needs one row per business key.)
 
     Unmatched dimension rows keep a NULL surrogate key (the reference's
     LEFT JOIN semantics — FIXTURES.md notes bookings contain passenger ids
     beyond the dim on purpose).
     """
+    out = source
     if target.exists():
         last_load = target.read().agg(F.max(cfg.cdc_col)).collect()[0][0]
-        src = source.filter(F.col(cfg.cdc_col) >= F.lit(last_load).cast("timestamp"))
-    else:
-        src = source
-    src = latest_by_key(src, cfg.grain_keys, [cfg.cdc_col])
-
-    out = src
+        out = source.filter(F.col(cfg.cdc_col) >= F.lit(last_load).cast("timestamp"))
     surrogate_cols = []
     for spec in cfg.dims:
         dim_cols = list(dict.fromkeys([*spec.join_on.values(), spec.surrogate_key]))

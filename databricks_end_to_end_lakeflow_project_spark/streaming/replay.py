@@ -29,8 +29,6 @@ accumulating in the stream.
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,6 +39,10 @@ from databricks_end_to_end_lakeflow_project_spark.operators.cdc import (
 )
 from databricks_end_to_end_lakeflow_project_spark.registry import query
 from databricks_end_to_end_lakeflow_project_spark.sources.readers import read_table
+from databricks_end_to_end_lakeflow_project_spark.sources.scratch import (
+    ephemeral_dir,
+    pid_scratch_dir,
+)
 
 
 def prepare_replay(
@@ -56,10 +58,6 @@ def prepare_replay(
     (pid-unique scratch: concurrent processes must not overwrite a dir
     the other is mid-read on; scratch.py prunes dead pids' leftovers and
     removes this process's dirs at exit)."""
-    from databricks_end_to_end_lakeflow_project_spark.sources.scratch import (
-        pid_scratch_dir,
-    )
-
     out = pid_scratch_dir("lakeflow_replay", sf_dir, f"{table}_{slices}")
     if os.path.exists(os.path.join(out, "_SUCCESS")):
         return out
@@ -109,10 +107,11 @@ def replay_scd1(
     from databricks_end_to_end_lakeflow_project_spark.session import cloned_session
 
     spark = cloned_session(spark, {"spark.sql.shuffle.partitions": "8"})
-    run = uuid.uuid4().hex[:8]
+    # per-call table and checkpoint, removed at interpreter exit
+    out = ephemeral_dir("lakeflow_replay_out_")
     table = ManagedParquetTable(
         spark,
-        os.path.join(tempfile.gettempdir(), "lakeflow_replay_out", f"scd1_{run}"),
+        os.path.join(out, "scd1"),
         keys=list(keys),
         sequence_by=sequence_by,
     )
@@ -126,10 +125,7 @@ def replay_scd1(
     q = (
         replay_stream(spark, replay_dir)
         .writeStream.foreachBatch(_apply)
-        .option(
-            "checkpointLocation",
-            os.path.join(tempfile.gettempdir(), "lakeflow_replay_out", f"ckpt_{run}"),
-        )
+        .option("checkpointLocation", os.path.join(out, "ckpt"))
         .trigger(availableNow=True)
         .start()
     )

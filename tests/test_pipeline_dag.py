@@ -6,7 +6,8 @@ from databricks_end_to_end_lakeflow_project_spark.pipeline.dag import Pipeline
 from databricks_end_to_end_lakeflow_project_spark.pipeline.expectations import (
     ExpectationFailed,
     Policy,
-    apply_expectations,
+    gate,
+    surfacing_failures,
 )
 
 
@@ -18,29 +19,35 @@ def df(spark):
 
 
 def test_expect_drop(df):
-    out, m = apply_expectations(
-        df, {"id_set": "id IS NOT NULL", "val_set": "val IS NOT NULL"}, Policy.DROP, "ds"
-    )
-    assert out.count() == 2
+    g = gate(df, {"id_set": "id IS NOT NULL", "val_set": "val IS NOT NULL"}, Policy.DROP, "ds")
+    assert g.result() is None  # gating is lazy: no action has run yet
+    assert g.passed.count() == 2
+    m = g.result()
     assert m.failed_rows == 2 and m.passed_rows == 2
     assert m.per_rule_failures == {"id_set": 1, "val_set": 1}
+    assert g.passed.columns == df.columns
 
 
 def test_expect_warn_keeps_rows(df):
-    out, m = apply_expectations(df, {"id_set": "id IS NOT NULL"}, Policy.WARN, "ds")
-    assert out.count() == 4
-    assert m.failed_rows == 1
+    g = gate(df, {"id_set": "id IS NOT NULL"}, Policy.WARN, "ds")
+    assert g.passed.count() == 4
+    m = g.result()
+    assert m.failed_rows == 1 and m.passed_rows == 3
 
 
 def test_expect_fail_raises(df):
-    with pytest.raises(ExpectationFailed):
-        apply_expectations(df, {"id_set": "id IS NOT NULL"}, Policy.FAIL, "ds")
+    g = gate(df, {"id_set": "id IS NOT NULL"}, Policy.FAIL, "ds")
+    with pytest.raises(ExpectationFailed, match="ds row fails id_set"):
+        with surfacing_failures():
+            g.passed.count()
 
 
 def test_expect_fail_passes_when_clean(df):
     clean = df.filter("id IS NOT NULL AND val IS NOT NULL")
-    out, m = apply_expectations(clean, {"id_set": "id IS NOT NULL"}, Policy.FAIL, "ds")
-    assert m.failed_rows == 0 and out.count() == 2
+    g = gate(clean, {"id_set": "id IS NOT NULL"}, Policy.FAIL, "ds")
+    assert g.passed.count() == 2
+    m = g.result()
+    assert m.failed_rows == 0 and m.passed_rows == 2
 
 
 def test_pipeline_cycle_detection(spark, tmp_path):
@@ -81,29 +88,86 @@ def test_cdc_flow_requires_declared_table(spark, tmp_path):
 
 
 def test_observed_expectations_single_pass(spark):
-    """Observation-based expectations: metrics come from the SAME action
-    that materializes the gated frame — counts must match the classic
-    two-pass variant, including rows dropped by the gate."""
-    from databricks_end_to_end_lakeflow_project_spark.pipeline.expectations import (
-        Policy,
-        apply_expectations,
-        apply_expectations_observed,
-    )
+    """The gate's metrics come from the SAME action that materializes the
+    gated frame: counting it runs no more Spark jobs than counting the
+    equivalent plain filter, and the metrics still include the rows the
+    gate dropped."""
+    import uuid
 
     df = spark.createDataFrame(
         [(1, "a"), (2, None), (None, "c"), (4, "d")], "id int, name string"
     )
     rules = {"id_set": "id IS NOT NULL", "name_set": "name IS NOT NULL"}
+    sc = spark.sparkContext
 
-    gated, _, finish = apply_expectations_observed(df, rules, Policy.DROP, "t")
-    kept = gated.count()  # the one action; metrics piggyback on it
-    got = finish()
+    def jobs_of(action):
+        group = f"single_pass_{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
-    _, want = apply_expectations(df, rules, Policy.DROP, "t")
-    assert kept == 2
-    assert got.failed_rows == want.failed_rows == 2
-    assert got.passed_rows == want.passed_rows == 2
-    assert got.per_rule_failures == want.per_rule_failures
+    g = gate(df, rules, Policy.DROP, "t")
+    kept, gated_jobs = jobs_of(g.passed.count)  # metrics piggyback on it
+    plain, plain_jobs = jobs_of(df.filter("id IS NOT NULL AND name IS NOT NULL").count)
+    assert kept == plain == 2
+    assert gated_jobs == plain_jobs >= 1
+    got = g.result()
+    assert got.failed_rows == 2 and got.passed_rows == 2
+    assert got.per_rule_failures == {"id_set": 1, "name_set": 1}
+
+
+def test_fail_view_aborts_flow_before_commit(spark, tmp_path):
+    """A FAIL view that sees a violation aborts its flow's write inside
+    the plan: the run raises ExpectationFailed and the target keeps its
+    commit version, its rows and no staged leftovers."""
+    import os
+
+    rows = [("a", 1, "x"), ("b", 1, "y")]
+    p = Pipeline(spark, str(tmp_path / "fail"))
+
+    @p.view(name="changes", expectations={"v_set": "v IS NOT NULL"}, policy=Policy.FAIL)
+    def changes(pl):
+        return spark.createDataFrame(rows, "k string, seq int, v string")
+
+    p.create_streaming_table("snap")
+    p.create_auto_cdc_flow(target="snap", source="changes", keys=["k"], sequence_by="seq")
+    p.run()
+    t = p.table("snap")
+    version = t.version()
+    before = sorted(map(tuple, t.read().collect()))
+    assert p.metrics["changes"].failed_rows == 0
+
+    rows[:] = [("a", 2, "x2"), ("c", 2, None)]
+    with pytest.raises(ExpectationFailed, match="changes row fails v_set"):
+        p.run()
+    assert t.version() == version
+    assert sorted(map(tuple, t.read().collect())) == before
+    assert not [d for d in os.listdir(tmp_path / "fail") if "__tmp_" in d]
+
+
+def test_finalize_skips_gate_that_never_ran(spark, tmp_path):
+    """A gated view resolved in a run but never executed has no metrics:
+    finalize_run must not wait on its observation (Observation.get would
+    block forever) and must log nothing for it."""
+    import threading
+
+    p = Pipeline(spark, str(tmp_path / "idle"))
+
+    @p.view(name="gated", expectations={"v_set": "v IS NOT NULL"})
+    def gated(pl):
+        return spark.createDataFrame([(1, None)], "id int, v string")
+
+    p.begin_run()
+    p.read("gated")  # resolved: the gate exists, its frame never runs
+    done = threading.Thread(target=p.finalize_run, daemon=True)
+    done.start()
+    done.join(timeout=120)
+    assert not done.is_alive(), "finalize_run blocked on an unexecuted gate"
+    assert p.metrics == {}
+    assert not (tmp_path / "idle" / "__event_log").exists()
 
 
 def test_quarantine_routes_violations_to_side_table(spark, tmp_path):

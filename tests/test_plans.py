@@ -546,6 +546,36 @@ def test_sessionize_single_exchange(spark):
     assert plan.count("Exchange hashpartitioning") == 1
 
 
+def test_merge_upsert_single_exchange(spark, tmp_path):
+    """Every upsert is ONE window over updates ∪ target: the first write,
+    the merge and the merge with a delete flag each plan exactly one hash
+    exchange on the key (no inner latest-by-key shuffle)."""
+    from databricks_end_to_end_lakeflow_project_spark.operators.cdc import (
+        ManagedParquetTable,
+        merge_upsert_plan,
+    )
+
+    t = ManagedParquetTable(spark, str(tmp_path / "t"))
+    t.overwrite(spark.createDataFrame([("a", 1, "x"), ("b", 1, "y")], "k string, seq int, v string"))
+    updates = spark.createDataFrame(
+        [("a", 2, "x2", False), ("a", 3, "x3", False), ("c", 1, "z", True)],
+        "k string, seq int, v string, d boolean",
+    )
+    cases = {
+        "first write": (merge_upsert_plan(None, updates.drop("d"), ["k"], "seq"),
+                        {("a", 3, "x3"), ("c", 1, "z")}),
+        "merge": (merge_upsert_plan(t.read(), updates.drop("d"), ["k"], "seq"),
+                  {("a", 3, "x3"), ("b", 1, "y"), ("c", 1, "z")}),
+        "merge with delete_col": (
+            merge_upsert_plan(t.read(), updates, ["k"], "seq", delete_col="d"),
+            {("a", 3, "x3"), ("b", 1, "y")},
+        ),
+    }
+    for name, (merged, want) in cases.items():
+        assert _plan(merged).count("Exchange hashpartitioning") == 1, name
+        assert set(map(tuple, merged.collect())) == want, name
+
+
 def test_dynamic_partition_pruning_engages(spark):
     """The partitioned-fact ⋈ filtered-dim join must carry a
     dynamicpruning subquery in the fact scan's PartitionFilters — the
